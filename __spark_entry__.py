@@ -8,8 +8,9 @@ serve the LLM-pipeline operators.  ``oracle_sql()`` holds the DuckDB
 equivalent for each query.
 
 Determinism contract (so value-hashes match bit-for-bit):
-- open/close use min_by/max_by over a composite (ts, event_id) key —
-  no positional ``first``/``last`` (SURVEY.md §2.9 Q1).
+- open/close are the value of the min/max total (ts, event_id, value)
+  key — no positional ``first``/``last`` (SURVEY.md §2.9 Q1); event_id
+  is unique, so the order is (ts, event_id), as in the oracles.
 - every SUM over doubles is computed on DECIMAL (associative, shuffle-
   order independent) and cast back to double in BOTH engines.
 - derived float metrics are ``round(x, 6)`` in BOTH engines.

@@ -90,14 +90,6 @@ def _lit_vec(values: list[float]) -> Column:
     return F.expr("array(" + ",".join(_sql_double(v) for v in values) + ")")
 
 
-def _lit_matrix(rows: list[list[float]]) -> Column:
-    """Literal array<array<double>> from one parsed expression string."""
-    inner = (
-        "array(" + ",".join(_sql_double(v) for v in row) + ")" for row in rows
-    )
-    return F.expr("array(" + ",".join(inner) + ")")
-
-
 def _dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product in double precision."""
     return F.aggregate(
@@ -536,19 +528,6 @@ def _nearest_cell(
 ) -> Column:
     """Index of the highest-cosine centroid (ties -> highest index)."""
     return F.array_max(_scored_cells(vec_col, centroids, sq_col))["cell"]
-
-
-def _probe_cells(
-    vec_col: Column,
-    centroids: list[list[float]],
-    n_probe: int,
-    sq_col: Column | None = None,
-) -> Column:
-    """Array of the ``n_probe`` highest-cosine centroid indices
-    (score desc, cell desc — matches :func:`_nearest_cell` ties)."""
-    scored = _scored_cells(vec_col, centroids, sq_col)
-    top = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
-    return F.transform(top, lambda x: x["cell"])
 
 
 def ivf_cells_auto(n: int, floor: int = DEFAULT_N_CELLS) -> int:

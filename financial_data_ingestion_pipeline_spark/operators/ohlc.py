@@ -8,16 +8,24 @@ Semantics decisions (SURVEY.md §2.9):
 
 - pandas positional ``first``/``last`` (dp:156) and the reference's
   default-frame ``last_value`` bug (Q1, dp:299,333) are both replaced by
-  the evident *intent*: deterministic open/close = value at the
-  min/max event time.  Implemented with ``min_by``/``max_by`` over a
-  composite ``(ts, *tie_cols)`` ordering struct, so results stay
-  deterministic even when two ticks share a timestamp (which WILL
-  happen at 100 TB even though the small fixtures have no ties).
+  the evident *intent*: open/close = price at the min/max event time.
+  Implemented as the price field of the ``min``/``max`` of the total
+  ordering struct ``(ts, *tie_cols, price)``: on a ``(ts, *tie_cols)``
+  tie, open is the lowest price and close the highest.  Ticks that still
+  tie carry the same price, so the result depends only on the data —
+  never on arrival, partition or commit order.  Spark cannot
+  hash-aggregate a struct buffer, so these aggregates plan as
+  SortAggregate (``min`` of the struct costs less than ``min_by`` over
+  it, which carries the price twice).
 - ``date_trunc('5 minutes', ...)`` is invalid PG (Q2, dp:320-333); the
   intent — arbitrary-width tumbling buckets — is ``F.window(ts, freq)``.
 - Sums are computed on DECIMAL and cast back to double: decimal
   addition is associative, so the result is bit-identical regardless of
   partitioning / shuffle order (double summation is not).
+
+The incremental hourly view (``warehouse.maintain_ohlc_mv``) is built
+from :func:`hourly_ohlc_partial` and :func:`merge_ohlc_partials`, so
+batch, stream and view share one order and one merge.
 
 Scale notes: each function is a single groupBy -> one shuffle on the
 (symbol, bucket) key; partial (map-side) aggregation is automatic, and
@@ -31,7 +39,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 #: frequency-name map mirroring the reference's freq_map (dp:320-325),
@@ -46,10 +54,9 @@ FREQ_MAP = {
 }
 
 
-def _order_key(ts_col: str, tie_cols: Sequence[str]) -> Column:
-    """Deterministic ordering key for min_by/max_by open/close."""
-    cols = [F.col(ts_col)] + [F.col(c) for c in tie_cols]
-    return F.struct(*cols) if len(cols) > 1 else cols[0]
+def _order_key(ts_col: str, tie_cols: Sequence[str], price_col: str) -> Column:
+    """Total ordering key; open/close are its min/max's price field."""
+    return F.struct(*[F.col(c) for c in (ts_col, *tie_cols, price_col)])
 
 
 def ohlc_aggs(
@@ -64,12 +71,12 @@ def ohlc_aggs(
     ``volume_col`` adds an order-independent (decimal-summed) volume
     total and a tick count.
     """
-    key = _order_key(ts_col, tie_cols)
+    key = _order_key(ts_col, tie_cols, price_col)
     aggs = [
-        F.min_by(price_col, key).alias("open"),
+        F.min(key)[price_col].alias("open"),
         F.max(price_col).alias("high"),
         F.min(price_col).alias("low"),
-        F.max_by(price_col, key).alias("close"),
+        F.max(key)[price_col].alias("close"),
     ]
     if volume_col is not None:
         dec = F.col(volume_col).cast(f"decimal(28,{volume_decimals})")
@@ -96,6 +103,17 @@ def daily_ohlc(
     )
 
 
+def _by_bucket(
+    ticks: DataFrame, freq: str, symbol_col: str, ts_col: str
+) -> GroupedData:
+    """Group by (symbol, tumbling bucket start); ``F.window`` drops
+    NULL-timestamp ticks rather than keeping a NULL bucket."""
+    bucket = F.window(F.col(ts_col), FREQ_MAP.get(freq, freq))
+    return ticks.groupBy(
+        F.col(symbol_col).alias("symbol"), bucket["start"].alias("bucket_start")
+    )
+
+
 def bucketed_ohlc(
     ticks: DataFrame,
     freq: str,
@@ -112,13 +130,50 @@ def bucketed_ohlc(
     (Q2/Q3).  ``freq`` is a Spark duration ('5 minutes', '1 hour') or a
     reference freq-map key ('5minute', 'hour').
     """
-    duration = FREQ_MAP.get(freq, freq)
-    bucket = F.window(F.col(ts_col), duration)
-    return (
-        ticks.groupBy(
-            F.col(symbol_col).alias("symbol"),
-            bucket["start"].alias("bucket_start"),
-        ).agg(*ohlc_aggs(price_col, ts_col, tie_cols, volume_col))
+    return _by_bucket(ticks, freq, symbol_col, ts_col).agg(
+        *ohlc_aggs(price_col, ts_col, tie_cols, volume_col)
+    )
+
+
+def hourly_ohlc_partial(
+    ticks: DataFrame,
+    symbol_col: str = "source_symbol",
+    ts_col: str = "timestamp",
+    price_col: str = "ltp",
+) -> DataFrame:
+    """Mergeable hourly partial: the ``bucketed_ohlc(ticks, "hour")``
+    aggregates plus ``first_ts``/``last_ts``, the extra state that makes
+    two partials combinable (see :func:`merge_ohlc_partials`).
+
+    Columns: symbol, bucket_start, open, high, low, close, first_ts,
+    last_ts, n_ticks.
+    """
+    *prices, n_ticks = ohlc_aggs(price_col, ts_col)
+    return _by_bucket(ticks, "hour", symbol_col, ts_col).agg(
+        *prices,
+        F.min(ts_col).alias("first_ts"),
+        F.max(ts_col).alias("last_ts"),
+        n_ticks,
+    )
+
+
+def merge_ohlc_partials(partials: DataFrame) -> DataFrame:
+    """Combine :func:`hourly_ohlc_partial` rows per (symbol, bucket).
+
+    A partial's first order key is ``(first_ts, open)`` and its last is
+    ``(last_ts, close)``, so the merged open/close are picked by the
+    same total order as a full recompute; high/low/n are plain
+    max/min/sum.  Associative and commutative: increments merge in any
+    number and any order.
+    """
+    return partials.groupBy("symbol", "bucket_start").agg(
+        F.min(_order_key("first_ts", (), "open"))["open"].alias("open"),
+        F.max("high").alias("high"),
+        F.min("low").alias("low"),
+        F.max(_order_key("last_ts", (), "close"))["close"].alias("close"),
+        F.min("first_ts").alias("first_ts"),
+        F.max("last_ts").alias("last_ts"),
+        F.sum("n_ticks").alias("n_ticks"),
     )
 
 

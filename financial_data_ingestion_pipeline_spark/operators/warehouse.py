@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ohlc
+
 TABLE_NAME = "second_level_data"
 
 
@@ -605,46 +607,6 @@ def snapshot_merge(
     return new_version
 
 
-def _ohlc_partial(
-    rows: DataFrame,
-    symbol_col: str = "source_symbol",
-    ts_col: str = "timestamp",
-    price_col: str = "ltp",
-) -> DataFrame:
-    """Mergeable hourly-OHLC partial: alongside open/high/low/close it
-    carries ``first_ts``/``last_ts``/``n_ticks``, which is exactly the
-    extra state that makes two partials combinable (open follows the
-    smaller first_ts, close the larger last_ts, high/low/n are plain
-    max/min/sum) — the same algebra Spark's partial aggregation uses
-    internally, lifted to the table level."""
-    hour = F.date_trunc("hour", F.col(ts_col))
-    return rows.groupBy(
-        F.col(symbol_col).alias("symbol"), hour.alias("bucket_start")
-    ).agg(
-        F.min_by(price_col, ts_col).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, ts_col).alias("close"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
-        F.count(F.lit(1)).alias("n_ticks"),
-    )
-
-
-def _ohlc_merge(partials: DataFrame) -> DataFrame:
-    """Combine OHLC partials per (symbol, bucket): associative, so any
-    number of increments merge in any order."""
-    return partials.groupBy("symbol", "bucket_start").agg(
-        F.min_by("open", "first_ts").alias("open"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", "last_ts").alias("close"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.sum("n_ticks").alias("n_ticks"),
-    )
-
-
 def maintain_ohlc_mv(
     spark: SparkSession,
     table_dir: str,
@@ -692,12 +654,12 @@ def maintain_ohlc_mv(
     increment = spark.read.parquet(
         *[os.path.join(table_dir, d) for d in sorted(new_dirs)]
     )
-    partial = _ohlc_partial(increment, symbol_col, ts_col, price_col)
+    partial = ohlc.hourly_ohlc_partial(increment, symbol_col, ts_col, price_col)
     try:
         current = read_snapshot(spark, mv_dir)
-        merged = _ohlc_merge(current.unionByName(partial))
-    except FileNotFoundError:
-        merged = _ohlc_merge(partial)
+        merged = ohlc.merge_ohlc_partials(current.unionByName(partial))
+    except FileNotFoundError:  # first refresh: the partial is the view
+        merged = partial
     mv_version = snapshot_commit(merged, mv_dir, mode="overwrite")
     with open(state_path, "w") as f:
         json.dump({"table_version": latest}, f)

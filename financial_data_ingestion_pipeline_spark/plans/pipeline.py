@@ -54,7 +54,6 @@ class PipelineConfig:
     symbols: list[str] = field(default_factory=lambda: ["ALL"])
     price_change_dates: tuple[str, str] | None = None   # dp:264-269
     min_pct_change: float = 3.0         # dp:280-281
-    tie_cols: tuple[str, ...] = ()      # OHLC open/close tie-break
 
 
 def ingest(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
@@ -96,7 +95,6 @@ def quality_reports(
             symbol_col="Ticker",
             ts_col="Timestamp",
             price_col="LTP",
-            tie_cols=cfg.tie_cols,
         )
     for name, df in reports.items():
         # small outputs -> single CSV per report, like dp:175-186
@@ -125,14 +123,13 @@ def analytics_outputs(
         out["price_change"] = analytics.price_change(
             wh, a, b, cfg.min_pct_change
         )
-    out["hourly_ohlc"] = ohlc.bucketed_ohlc(wh, "hour", tie_cols=cfg.tie_cols)
+    out["hourly_ohlc"] = ohlc.bucketed_ohlc(wh, "hour")
     out["aggregated"] = ohlc.resample(
         wh,
         cfg.freq,
         from_ts=cfg.from_ts,
         to_ts=cfg.to_ts,
         symbols=cfg.symbols,
-        tie_cols=cfg.tie_cols,
     )
     # hourly_ohlc is the MV analog: persisted as a parquet aggregate table.
     out["hourly_ohlc"].write.mode("overwrite").parquet(

@@ -13,9 +13,11 @@ Design for scale:
   ``withWatermark(ts, delay)`` so window state is dropped once the
   watermark passes — without it, a 100 TB backfill would accumulate
   unbounded aggregation state.
-- **OHLC is the same declarative aggregate as batch** (min_by/max_by
-  over the event-time key) — one shuffle on (symbol, window), partial
-  aggregation map-side, exactly the batch plan applied incrementally.
+- **OHLC is the same declarative aggregate as batch** (``ohlc_aggs``:
+  min/max of the total ``(ts, price)`` key: on a timestamp tie open is
+  the lowest price and close the highest, as in batch) — one
+  shuffle on (symbol, window), exactly the batch plan applied
+  incrementally.
 - **Dedup is ``dropDuplicatesWithinWatermark``** on the natural tick key
   (symbol, timestamp): state expires with the watermark instead of
   growing forever like plain ``dropDuplicates`` would.
@@ -92,7 +94,6 @@ def streaming_ohlc(
     ts_col: str = "timestamp",
     price_col: str = "ltp",
     volume_col: str | None = None,
-    tie_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Tumbling-window OHLC over the stream — the hourly_ohlc MV
     (dp:290-314) maintained incrementally, intent semantics (Q1: close =
@@ -109,7 +110,7 @@ def streaming_ohlc(
         src = src.withWatermark(ts_col, watermark)
     return (
         src.groupBy(win, F.col(symbol_col).alias("symbol"))
-        .agg(*ohlc_aggs(price_col, ts_col, tie_cols, volume_col))
+        .agg(*ohlc_aggs(price_col, ts_col, volume_col=volume_col))
         .select(
             "symbol",
             F.col("window.start").alias("bucket_start"),
@@ -252,7 +253,6 @@ def run_ohlc_stream_once(
     symbol_col: str = "source_symbol",
     ts_col: str = "timestamp",
     price_col: str = "ltp",
-    tie_cols: Sequence[str] = (),
     max_files_per_trigger: int | None = None,
 ) -> None:
     """End-to-end one-shot: stream the landing dir, dedup, aggregate,
@@ -276,7 +276,6 @@ def run_ohlc_stream_once(
         symbol_col=symbol_col,
         ts_col=ts_col,
         price_col=price_col,
-        tie_cols=tie_cols,
     )
     q = write_ohlc_table(agg, out_path, checkpoint, available_now=True)
     q.awaitTermination()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import csv
 import glob
+import itertools
 import os
 import zipfile
 
@@ -411,7 +412,7 @@ def test_incremental_ohlc_mv_matches_recompute(spark, tmp_path):
     refresh must read only the increment (verified by state file)."""
     import datetime as dt
 
-    from financial_data_ingestion_pipeline_spark.operators import warehouse
+    from financial_data_ingestion_pipeline_spark.operators import ohlc, warehouse
     from financial_data_ingestion_pipeline_spark.schemas import WAREHOUSE_SCHEMA
 
     def ticks(day, n, base):
@@ -444,14 +445,81 @@ def test_incremental_ohlc_mv_matches_recompute(spark, tmp_path):
         (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
         for r in warehouse.read_snapshot(spark, mv).collect()
     }
-    full = warehouse._ohlc_merge(
-        warehouse._ohlc_partial(warehouse.read_snapshot(spark, t))
-    )
+    full = ohlc.bucketed_ohlc(warehouse.read_snapshot(spark, t), "hour")
     want = {
         (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
         for r in full.collect()
     }
     assert got == want and got
+
+
+#: Ticks that share (symbol, second) at different prices, spread over
+#: three commit groups, plus one tick whose timestamp did not parse.
+_TIED_TICKS = {
+    "a": [("X", "09:00:00", 10.0), ("X", "09:00:00", 12.0),
+          ("X", "09:59:59", 11.0), ("Y", "10:30:00", 5.0), ("X", None, 99.0)],
+    "b": [("X", "09:00:00", 9.0), ("X", "09:59:59", 13.0),
+          ("Y", "10:30:00", 4.0), ("Y", "10:30:00", 8.0)],
+    "c": [("X", "09:00:00", 11.5), ("X", "09:59:59", 10.5),
+          ("Y", "10:30:00", 6.0), ("X", "10:00:00", 1.0), ("X", "10:00:00", 3.0)],
+}
+#: all groups in one commit (every tie inside one increment), then every
+#: order of one commit per group (ties split across increments)
+_COMMIT_ORDERS = [("abc",), *itertools.permutations("abc")]
+
+
+def _lexicographic_hourly_ohlc(ticks):
+    """pandas reference: open/close = price at the min/max (ts, price)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(ticks, columns=["symbol", "ts", "price"]).dropna()
+    pdf = pdf.sort_values(["symbol", "ts", "price"])
+    pdf["bucket_start"] = pdf["ts"].dt.floor("h")
+    g = pdf.groupby(["symbol", "bucket_start"])["price"]
+    return {
+        (sym, start.to_pydatetime()): (o, h, lo, c, n)
+        for (sym, start), o, h, lo, c, n in zip(
+            g.first().index, g.first(), g.max(), g.min(), g.last(), g.size()
+        )
+    }
+
+
+def test_ohlc_view_is_independent_of_commit_and_arrival_order(spark, tmp_path):
+    """Tied ticks landed in every commit order, each commit as one or
+    four files (alternating, so both layouts meet every position): the
+    incremental view, the batch hourly OHLC and a pandas (ts, price)
+    reference agree in every case, and the unparseable-timestamp tick
+    opens no bucket."""
+    import datetime as dt
+
+    from financial_data_ingestion_pipeline_spark.operators import ohlc, warehouse
+    from financial_data_ingestion_pipeline_spark.schemas import WAREHOUSE_SCHEMA
+
+    def tick(sym, hms, price):
+        day = dt.date(2022, 4, 4)
+        return (sym, hms and dt.datetime.combine(day, dt.time.fromisoformat(hms)), price)
+
+    def ohlc_rows(df):
+        return {
+            (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
+            for r in df.collect()
+        }
+
+    groups = {g: [tick(*t) for t in ticks] for g, ticks in _TIED_TICKS.items()}
+    want = _lexicographic_hourly_ohlc([t for ticks in groups.values() for t in ticks])
+    for i, order in enumerate(_COMMIT_ORDERS):
+        t, mv = str(tmp_path / f"tbl{i}"), str(tmp_path / f"mv{i}")
+        for j, block in enumerate(order):
+            rows = [(*tk, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0) for g in block for tk in groups[g]]
+            n_files = (1, 4)[(i + j) % 2]
+            warehouse.snapshot_commit(
+                spark.createDataFrame(rows, WAREHOUSE_SCHEMA).repartition(n_files), t
+            )
+            warehouse.maintain_ohlc_mv(spark, t, mv)
+        view = ohlc_rows(warehouse.read_snapshot(spark, mv))
+        batch = ohlc_rows(ohlc.bucketed_ohlc(warehouse.read_snapshot(spark, t), "hour"))
+        assert view == batch == want, order
+        assert all(start is not None for _, start in view), order
 
 
 def test_vacuum_removes_only_unreferenced(spark, tmp_path):

@@ -764,9 +764,7 @@ def test_stream_ingest_plus_incremental_mv(spark, tmp_path_factory):
         (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
         for r in warehouse.read_snapshot(spark, mv).collect()
     }
-    full = warehouse._ohlc_merge(
-        warehouse._ohlc_partial(warehouse.read_snapshot(spark, t))
-    )
+    full = bucketed_ohlc(warehouse.read_snapshot(spark, t), "hour")
     want = {
         (r.symbol, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
         for r in full.collect()
